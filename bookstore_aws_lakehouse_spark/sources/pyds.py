@@ -21,10 +21,13 @@ function in the read path at all. What the integration buys over
 - **Arrow batches**: ``read`` yields pyarrow RecordBatches straight from
   the parquet reader — the vectorized path, no Python row objects.
 
-Local-filesystem scope (the sandbox's reality): manifests and data are
-read with plain ``open``/pyarrow — the Python DS API runs in Python
-workers with no JVM FileSystem handle. On a cluster the package must be
-shipped to executors (cloudpickle serializes the reader by reference).
+The table format itself — manifest listing, reads and atomic publish,
+commit composition, stats pruning — is the shared core
+``sources/tablelog.py``, the same code ``snapshot_*`` runs. Local-
+filesystem scope: the Python DS API runs in Python workers with no JVM
+FileSystem handle, so manifests and data are read with plain
+``open``/pyarrow. On a cluster the package must be shipped to executors
+(cloudpickle serializes the reader by reference).
 """
 
 from __future__ import annotations
@@ -53,29 +56,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from bookstore_aws_lakehouse_spark.sources import tablelog
+from bookstore_aws_lakehouse_spark.sources.tablelog import norm_uri
+
 FORMAT_NAME = "lakesnap"
-
-
-def _local(path: str) -> str:
-    if path.startswith("file:"):
-        return "/" + path[5:].lstrip("/")
-    return path
-
-
-def _read_manifest_local(table: str, version: int | None) -> dict:
-    mdir = os.path.join(_local(table), "_manifests")
-    versions = sorted(
-        int(f[1:-5])
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    with open(os.path.join(mdir, f"v{v}.json")) as f:
-        return json.load(f)
 
 
 @dataclass
@@ -90,7 +74,8 @@ class _FilePartition(InputPartition):
 
 
 def _bounds_for(filters: Sequence[Filter]) -> dict[str, dict]:
-    """Distill pushed filters into per-column prune questions:
+    """Distill pushed filters into the per-column prune questions
+    ``tablelog.file_may_match`` answers:
     {col: {"values": [...] | None, "lo": x | None, "hi": y | None}}.
     Only top-level single-part columns participate (nested paths are
     never pruned on)."""
@@ -121,70 +106,11 @@ def _bounds_for(filters: Sequence[Filter]) -> dict[str, dict]:
     return out
 
 
-def _stat_norm(v):
-    """Canonical JSON-portable form for a stats/probe value — mirror of
-    sources/snapshots.py::_stat_norm (this module is self-contained by
-    design); keep the two definitions bit-identical. Timestamps/dates
-    become fixed-width UTC-naive ISO strings whose lexicographic order
-    equals chronological order. A NAIVE datetime is treated as
-    HOST-LOCAL via ``time.mktime`` — the exact PySpark
-    ``TimestampType.toInternal`` semantic, including its ``tm_isdst=-1``
-    DST resolution — see the snapshots.py twin for the full rationale."""
-    import datetime as _dt
-    import time as _time
-
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            # the TimestampType.toInternal twin: int(mktime) seconds +
-            # carried microseconds
-            v = _dt.datetime.fromtimestamp(
-                int(_time.mktime(v.timetuple())), _dt.timezone.utc
-            ) + _dt.timedelta(microseconds=v.microsecond)
-        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return v.isoformat(timespec="microseconds")
-    if isinstance(v, _dt.date):
-        return _dt.datetime(v.year, v.month, v.day).isoformat(
-            timespec="microseconds"
-        )
-    return v
-
-
-def _file_may_match(stats_entry: dict, bounds: dict[str, dict]) -> bool:
-    """Conservative: a file survives unless some column's stats PROVE the
-    pushed predicate can't match. Missing stats for a column → survive.
-    Probe values are normalized to the stats' canonical form
-    (timestamps/dates ride the manifest as ISO strings)."""
-    for col, b in bounds.items():
-        row = stats_entry.get(col)
-        if row is None:
-            continue
-        lo, hi, has_null = row
-        if lo is None:
-            # min None = empty file OR a non-empty file whose column is
-            # entirely NULL. A pushed null-probe (EqualNullSafe(col, NULL)
-            # → None in values) MATCHES an all-NULL column, so only prune
-            # when no probe asks for NULL or the file provably has none.
-            if has_null and any(v is None for v in b["values"]):
-                continue
-            return False
-        try:
-            if b["values"]:
-                if not any(lo <= _stat_norm(v) <= hi for v in b["values"]):
-                    return False
-            if b["lo"] is not None and hi < _stat_norm(b["lo"]):
-                return False
-            if b["hi"] is not None and lo > _stat_norm(b["hi"]):
-                return False
-        except TypeError:  # cross-type compare: be conservative
-            continue
-    return True
-
-
 class SnapshotReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType) -> None:
         self._schema = schema
         version = options.get("version")
-        self._manifest = _read_manifest_local(
+        _, self._manifest = tablelog.pin(
             options["path"], int(version) if version is not None else None
         )
         # column mapping: files carry physical names; read by physical,
@@ -202,14 +128,10 @@ class SnapshotReader(DataSourceReader):
         return iter(filters)
 
     def partitions(self) -> Sequence[InputPartition]:
-        stats = self._manifest.get("file_stats") or {}
-        kept = [
-            f
-            for f in self._manifest["files"]
-            if not self._bounds
-            or _file_may_match(stats.get(f, {}), self._bounds)
-        ]
-        return [_FilePartition(_local(f)) for f in kept]
+        kept = tablelog.prune(
+            self._manifest["files"], self._manifest.get("file_stats"), self._bounds
+        )
+        return [_FilePartition(norm_uri(f)) for f in kept]
 
     def read(self, partition: _FilePartition):
         import pyarrow.parquet as pq
@@ -235,10 +157,10 @@ def _dead_positions(manifest: dict, local_path: str):
     None when the file is clean."""
     dv = manifest.get("dv") or {}
     card = dv.get("cardinality") or {}
-    if not any(_local(f) == local_path for f in card):
+    if not any(norm_uri(f) == local_path for f in card):
         return None
     return _load_positions(
-        [_local(sc) for sc in dv.get("sidecars") or []], local_path
+        [norm_uri(sc) for sc in dv.get("sidecars") or []], local_path
     )
 
 
@@ -306,7 +228,7 @@ class SnapshotDataSource(DataSource):
 
     def schema(self):
         version = self.options.get("version")
-        m = _read_manifest_local(
+        _, m = tablelog.pin(
             self.options["path"], int(version) if version is not None else None
         )
         return StructType.fromJson(m["schema"])
@@ -380,25 +302,17 @@ class SnapshotStreamReader(DataSourceStreamReader):
     def _manifest(self, v: int) -> dict:
         m = self._mcache.get(v)
         if m is None:
-            m = _read_manifest_local(self._table, v)
+            _, m = tablelog.pin(self._table, v)
             if len(self._mcache) >= 512:  # bounded on high-churn tables
                 self._mcache.clear()
             self._mcache[v] = m
         return m
 
-    def _versions(self) -> list[int]:
-        mdir = os.path.join(_local(self._table), "_manifests")
-        return sorted(
-            int(f[1:-5])
-            for f in os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
     def initialOffset(self) -> dict:
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        vs = self._versions()
+        vs = tablelog.list_versions(self._table)
         tip = vs[-1] if vs else self._start
         if self._max_versions is not None and self._last_end is not None:
             tip = min(tip, self._last_end + self._max_versions)
@@ -409,7 +323,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         v0, v1 = start["version"], end["version"]
         if v1 <= v0:
             return []
-        have = set(self._versions())
+        have = set(tablelog.list_versions(self._table))
         base_files: set[str] = set()
         if v0:
             if v0 not in have:
@@ -464,14 +378,14 @@ class SnapshotStreamReader(DataSourceStreamReader):
         # subtract them, exactly like every batch read path.
         dv = end_m.get("dv") or {}
         card = dv.get("cardinality") or {}
-        sidecars = tuple(_local(sc) for sc in dv.get("sidecars") or [])
-        dirty = {_local(f) for f in card}
+        sidecars = tuple(norm_uri(sc) for sc in dv.get("sidecars") or [])
+        dirty = {norm_uri(f) for f in card}
         return [
             _FilePartition(
-                _local(f),
+                norm_uri(f),
                 cols=cols,
                 phys_of=phys_of,
-                dv_sidecars=sidecars if _local(f) in dirty else None,
+                dv_sidecars=sidecars if norm_uri(f) in dirty else None,
             )
             for f in end_m["files"]
             if f not in base_files
@@ -514,6 +428,14 @@ class _WroteFile(WriterCommitMessage):
     num_rows: int
 
 
+def _fields(schema: dict) -> set:
+    """A schema JSON's (name, type) pairs, nullability ignored."""
+    return {
+        (f["name"], json.dumps(f["type"], sort_keys=True))
+        for f in schema["fields"]
+    }
+
+
 class SnapshotWriter(DataSourceArrowWriter):
     """Arrow-batch writer completing the format trio (read / readStream /
     write): each task streams its RecordBatches into ONE parquet file
@@ -528,14 +450,11 @@ class SnapshotWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool) -> None:
         import uuid as _uuid
 
-        self._table = _local(options["path"])
+        self._table = norm_uri(options["path"])
         self._schema = schema
         self._overwrite = overwrite
         self._tx = f"{self._table.rstrip('/')}/data/tx-{_uuid.uuid4().hex[:12]}"
-        try:
-            tip = _read_manifest_local(self._table, None)
-        except (FileNotFoundError, OSError, ValueError):
-            tip = {}
+        _, tip = tablelog.tip(self._table)
         mapping = tip.get("column_mapping") or {}
         retired = set(tip.get("retired_physical") or [])
         # overwrite replaces schema + files: renamed-frozen physical
@@ -598,123 +517,51 @@ class SnapshotWriter(DataSourceArrowWriter):
         return _WroteFile(path=path, num_rows=n)
 
     def commit(self, messages) -> None:
-        import time as _time
-
         files = sorted(
             "file:" + m.path for m in messages if m is not None and m.path
         )
-        mdir = os.path.join(self._table, "_manifests")
-        os.makedirs(mdir, exist_ok=True)
-        for _ in range(50):
-            versions = sorted(
-                int(f[1:-5])
-                for f in os.listdir(mdir)
-                if f.startswith("v") and f.endswith(".json")
-            )
-            prev: list[str] = []
-            if versions:
-                with open(os.path.join(mdir, f"v{versions[-1]}.json")) as f:
-                    tip = json.load(f)
-                # the format writer has no engine to validate CHECK
-                # expressions with — refuse rather than silently skip
-                # enforcement (use snapshot_append/merge on constrained
-                # tables)
-                if tip.get("constraints"):
-                    SnapshotWriter.abort(self, messages)
-                    raise ValueError(
-                        f"table has CHECK constraints "
-                        f"{sorted(tip['constraints'])}; the lakesnap format "
-                        f"writer cannot validate them — write via "
-                        f"snapshot_append/snapshot_merge instead"
-                    )
-                if not self._overwrite:
-                    tip_fields = {
-                        (fl["name"], json.dumps(fl["type"], sort_keys=True))
-                        for fl in tip["schema"]["fields"]
-                    }
-                    new_fields = {
-                        (fl["name"], json.dumps(fl["type"], sort_keys=True))
-                        for fl in json.loads(self._schema.json())["fields"]
-                    }
-                    if tip_fields != new_fields:
-                        SnapshotWriter.abort(self, messages)
-                        raise ValueError(
-                            "append schema differs from the table schema; "
-                            "the format writer does not evolve schemas — "
-                            "use snapshot_append(merge_schema=True)"
-                        )
-                    prev = tip["files"]
-            v = (versions[-1] + 1) if versions else 1
-            manifest = {
-                "operation": "overwrite" if self._overwrite else "append",
-                "files": prev + files,
-                "schema": json.loads(self._schema.json()),
-                "committed_at_unix": round(_time.time(), 3),
-                "version": v,
-            }
-            if versions:
-                # logical-namespace facts persist across any commit;
-                # per-file facts (stats/blooms/deletion vectors) ride with
-                # the files this commit still references — on append that
-                # is every previous file, on overwrite none
-                for key in ("column_mapping", "retired_physical", "txn"):
-                    # table-level facts persist across ANY commit — txn
-                    # watermarks especially: dropping them would let an
-                    # idempotent append re-apply after a DS write
-                    if tip.get(key):
-                        manifest[key] = tip[key]
-                if self._overwrite:
-                    # commit the mapping the files were WRITTEN with,
-                    # pruned to the written schema (engine _commit's
-                    # overwrite rule): inheriting the claim-time tip's
-                    # would let a rename racing this job install a
-                    # mapping the parquet files don't satisfy, and an
-                    # overwrite that drops a renamed column must drop
-                    # its stale {gone_logical: physical} entry too
-                    names = set(self._schema.fieldNames())
-                    pruned = {
-                        l: p for l, p in self._mapping.items() if l in names
-                    }
-                    if pruned:
-                        manifest["column_mapping"] = pruned
-                    elif manifest.get("column_mapping"):
-                        del manifest["column_mapping"]
-                if not self._overwrite:
-                    for key in ("file_stats", "file_blooms"):
-                        if tip.get(key):
-                            manifest[key] = tip[key]
-                    if tip.get("dv"):
-                        manifest["dv"] = tip["dv"]
-            if getattr(self, "_txn", None):
+        schema = json.loads(self._schema.json())
+
+        def build(tip: dict) -> dict:
+            # the format writer has no engine to validate CHECK
+            # expressions with — refuse rather than silently skip
+            # enforcement (use snapshot_append/merge on constrained tables)
+            if tip.get("constraints"):
+                SnapshotWriter.abort(self, messages)
+                raise ValueError(
+                    f"table has CHECK constraints "
+                    f"{sorted(tip['constraints'])}; the lakesnap format "
+                    f"writer cannot validate them — write via "
+                    f"snapshot_append/snapshot_merge instead"
+                )
+            if self._overwrite or not tip:
+                prev = []
+            elif _fields(tip["schema"]) != _fields(schema):
+                SnapshotWriter.abort(self, messages)
+                raise ValueError(
+                    "append schema differs from the table schema; "
+                    "the format writer does not evolve schemas — "
+                    "use snapshot_append(merge_schema=True)"
+                )
+            else:
+                prev = tip["files"]
+            # append carries every previous file with its per-file facts;
+            # overwrite commits the mapping the files were WRITTEN with
+            # (a rename racing this job must not install a mapping the
+            # parquet files don't satisfy)
+            return tablelog.compose(
+                tip,
+                "overwrite" if self._overwrite else "append",
+                prev + files,
+                schema,
                 # the streaming sink's batch id rides the tip-inherited
                 # txn map (vacuum-proof exactly-once)
-                app_id, tv = self._txn
-                merged = dict(manifest.get("txn") or {})
-                merged[app_id] = max(int(tv), int(merged.get(app_id, tv)))
-                manifest["txn"] = merged
-            if getattr(self, "_app", None):
-                manifest["app"] = self._app
-            # atomic claim+publish, same protocol as the engine's
-            # _claim_version: open("x") + dump would make the version
-            # name visible before its payload — a concurrent reader
-            # could open a half-written tip. Write-temp + link(2) is
-            # atomic and fails EEXIST on a lost race.
-            import uuid as _uuid
+                txn=dict([self._txn]) if getattr(self, "_txn", None) else None,
+                column_mapping=self._mapping if self._overwrite else None,
+                app=getattr(self, "_app", None),
+            )
 
-            target = os.path.join(mdir, f"v{v}.json")
-            tmp = f"{target}.tmp-{_uuid.uuid4().hex[:12]}"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, sort_keys=True)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, target)
-                return
-            except FileExistsError:
-                continue  # lost the race: recompose against the new tip
-            finally:
-                os.unlink(tmp)
-        raise RuntimeError("snapshot write lost 50 consecutive version races")
+        tablelog.commit_next(self._table, build)
 
     def abort(self, messages) -> None:
         for m in messages:
@@ -750,27 +597,17 @@ class SnapshotStreamWriter(SnapshotWriter, DataSourceStreamArrowWriter):
         per batch AND forgot ids once their manifest was vacuumed).
         Falls back to the legacy full scan for pre-upgrade tables whose
         tip predates the txn recording."""
-        mdir = os.path.join(self._table, "_manifests")
-        if not os.path.isdir(mdir):
-            return None
-        try:
-            tip = _read_manifest_local(self._table, None)
-        except (FileNotFoundError, OSError, ValueError):
-            return None
+        _, tip = tablelog.tip(self._table)
         b = (tip.get("txn") or {}).get(self._TXN_APP_ID)
         if b is not None:
             return int(b)
         last = None
-        for name in os.listdir(mdir):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
+        for v in tablelog.list_versions(self._table):
             try:
-                with open(os.path.join(mdir, name)) as f:
-                    b = (json.load(f).get("app") or {}).get("stream_sink", {}).get(
-                        "last_batch_id"
-                    )
+                m = tablelog.read_manifest(self._table, v)
             except (OSError, ValueError):
                 continue
+            b = (m.get("app") or {}).get("stream_sink", {}).get("last_batch_id")
             if b is not None and (last is None or b > last):
                 last = b
         return last

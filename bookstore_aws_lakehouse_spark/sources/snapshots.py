@@ -3,8 +3,12 @@ table format (Delta/Iceberg), built from nothing but parquet + a JSON
 commit log — because this sandbox verifiably ships no delta/iceberg
 runtime (no python module, no jars, offline package fetch; NOTES_r7).
 
-Layout (all paths via the Hadoop FileSystem API, so file:// , hdfs:// and
-s3a:// behave identically):
+Layout (the manifest log — listing, reads, atomic publish, commit
+composition and stats pruning — lives in ``sources/tablelog.py``, the
+format core ``format("lakesnap")`` shares: local tables are handled with
+plain ``os`` calls there, and only remote schemes such as ``hdfs://`` or
+``s3a://`` go through the Hadoop FileSystem API; data files are written,
+listed and deleted through Spark and Hadoop FS):
 
     <table>/
       data/tx-<uuid>/part-*.parquet     -- immutable data files, one dir per commit
@@ -19,11 +23,11 @@ staging-swap ``upsert_parquet``):
   files a concurrent reader's plan references.)
 - **Time travel**: every version stays readable until ``vacuum``.
 - **Atomic commit with conflict detection**: a manifest claims
-  ``v<N>.json`` via ``FileSystem.create(overwrite=False)`` — exclusive
-  create. State-independent commits (overwrite) retry at the next free
-  number; state-DEPENDENT commits (append/merge) claim exactly the
-  version they composed against +1 and on a race re-read the tip and
-  recompute (append recomposes the manifest; merges re-run against the
+  ``v<N>.json`` by an exclusive, atomic publish (``tablelog.publish``:
+  temp file + ``link(2)``). State-independent commits (overwrite) retry
+  at the next free number; state-DEPENDENT commits (append/merge) claim
+  exactly the version they composed against +1 and on a race re-read the
+  tip and recompute (append recomposes the manifest; merges re-run against the
   new snapshot and delete their orphaned files) — the Delta
   optimistic-concurrency contract. Partitioned merges additionally
   resolve conflict CLASSES: a merge provably disjoint from every racing
@@ -58,13 +62,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-_MANIFEST_DIR = "_manifests"
+from bookstore_aws_lakehouse_spark.sources import tablelog
+from bookstore_aws_lakehouse_spark.sources.tablelog import (  # noqa: F401
+    MAX_COMMIT_RETRIES as _MAX_COMMIT_RETRIES,
+    _stat_norm,
+)
+
+_MANIFEST_DIR = tablelog.MANIFEST_DIR
 _DATA_DIR = "data"
 #: deletion-vector sidecars: (file, pos) parquet under <table>/_dv/tx-*/
 _DV_DIR = "_dv"
-#: bounded optimistic-concurrency retries: losing this many consecutive
-#: version races means a pathologically hot commit loop, not bad luck
-_MAX_COMMIT_RETRIES = 50
 
 
 def _fs(spark: SparkSession, path: str):
@@ -85,36 +92,12 @@ def _list_parquet_files(spark: SparkSession, directory: str) -> list[str]:
     return sorted(out)
 
 
-def _manifest_path(table: str, version: int) -> str:
-    return f"{table.rstrip('/')}/{_MANIFEST_DIR}/v{version}.json"
+def list_versions(spark: SparkSession, table: str) -> list[int]:
+    return tablelog.list_versions(table, spark)
 
 
 def _read_manifest(spark: SparkSession, table: str, version: int) -> dict:
-    fs, hpath, jvm = _fs(spark, _manifest_path(table, version))
-    stream = fs.open(hpath)
-    try:
-        # IOUtils drains the JVM-side stream in one call; py4j hands the
-        # byte[] back as Python bytes (a Python-side read(buf) loop can't
-        # work — py4j passes buffer copies, never mutates the original)
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        return json.loads(data.decode("utf-8"))
-    finally:
-        stream.close()
-
-
-def list_versions(spark: SparkSession, table: str) -> list[int]:
-    fs, hpath, _ = _fs(spark, f"{table.rstrip('/')}/{_MANIFEST_DIR}")
-    if not fs.exists(hpath):
-        return []
-    versions = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                versions.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(versions)
+    return tablelog.read_manifest(table, version, spark)
 
 
 class SnapshotConflictError(RuntimeError):
@@ -125,102 +108,26 @@ class SnapshotConflictError(RuntimeError):
 
 
 def _claim_version(spark: SparkSession, table: str, manifest: dict, v: int) -> bool:
-    """Atomically claim AND publish ``v<v>.json``. True on success, False
-    if the version already exists (lost the race).
-
-    The claim must also be an atomic PUBLISH: the old exclusive-create-
-    then-write sequence made the version name visible (the claim) before
-    the payload landed, so a concurrent reader listing versions could
-    open the new tip and read zero/partial bytes — the concurrent-writer
-    fuzz caught exactly that (EOF on a half-written manifest). On a
-    local filesystem the payload is therefore written to a temp name and
-    hard-linked into place: ``link(2)`` is atomic, fails EEXIST when the
-    version is already claimed, and readers can only ever observe a
-    complete manifest. (Same protocol as the DataSource writer; Delta on
-    HDFS gets this from atomic no-overwrite rename.)"""
-    manifest["version"] = v
-    payload = json.dumps(manifest, sort_keys=True).encode("utf-8")
-    target_str = _manifest_path(table, v)
-    local = (
-        "/" + target_str[5:].lstrip("/")
-        if target_str.startswith("file:")
-        else (target_str if "://" not in target_str else None)
-    )
-    if local is not None:
-        import os as _os
-
-        _os.makedirs(_os.path.dirname(local), exist_ok=True)
-        tmp = f"{local}.tmp-{uuid.uuid4().hex[:12]}"
-        with open(tmp, "wb") as f:
-            f.write(payload)
-            f.flush()
-            _os.fsync(f.fileno())
-        try:
-            _os.link(tmp, local)
-        except FileExistsError:
-            return False
-        finally:
-            _os.unlink(tmp)
-        return True
-    # remote FS fallback: exclusive create (HDFS rename-based commit
-    # services are the production answer; this path is not the sandbox's)
-    fs, _, jvm = _fs(spark, table)
-    target = jvm.org.apache.hadoop.fs.Path(target_str)
-    try:
-        out = fs.create(target, False)  # overwrite=False: exclusive
-    except Exception:
-        # ONLY a lost version race returns False — and the proof of a
-        # race is that the target manifest now EXISTS (Hadoop's local FS
-        # raises FileAlreadyExistsException for unrelated causes too,
-        # e.g. a parent that is not a directory). A permissions/disk/
-        # path error must surface, not masquerade as 50 lost races.
-        try:
-            if fs.exists(target):
-                return False
-        except Exception:
-            pass
-        raise
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
-    return True
+    """Atomically claim AND publish ``v<v>.json``; False if the version
+    already exists (lost the race). See ``tablelog.publish``."""
+    return tablelog.claim_version(table, manifest, v, spark)
 
 
 def _try_commit(
-    spark: SparkSession,
-    table: str,
-    manifest: dict,
-    expected_version: int | None = None,
+    spark: SparkSession, table: str, manifest: dict, expected_version: int
 ) -> int:
-    """Commit a manifest.
-
-    ``expected_version=None`` (state-INDEPENDENT commits — overwrite,
-    whose content doesn't reference prior state): claim the next free
-    number, skipping past racing writers.
-
-    ``expected_version=v`` (state-DEPENDENT commits — append/merge,
-    composed against the snapshot at v-1): claim EXACTLY v; if a racing
+    """Commit a state-DEPENDENT manifest (composed against the snapshot
+    at ``expected_version - 1``): claim EXACTLY that version; if a racing
     writer took it, raise :class:`SnapshotConflictError` so the caller
     re-reads and recomputes instead of silently dropping the racer's
     files — the same optimistic-concurrency contract Delta's commit
-    protocol enforces."""
-    if expected_version is not None:
-        if _claim_version(spark, table, manifest, expected_version):
-            return expected_version
-        raise SnapshotConflictError(
-            f"version {expected_version} on {table} was taken by a "
-            f"concurrent writer; re-read and retry the operation"
-        )
-    versions = list_versions(spark, table)
-    v = (versions[-1] + 1) if versions else 1
-    for _ in range(_MAX_COMMIT_RETRIES):
-        if _claim_version(spark, table, manifest, v):
-            return v
-        v += 1  # lost the race for this number; content is state-free
-    raise RuntimeError(
-        f"snapshot commit lost {_MAX_COMMIT_RETRIES} consecutive version "
-        f"races on {table} — runaway concurrent writer loop?"
+    protocol enforces. State-INDEPENDENT commits go through
+    ``tablelog.commit_next``."""
+    if _claim_version(spark, table, manifest, expected_version):
+        return expected_version
+    raise SnapshotConflictError(
+        f"version {expected_version} on {table} was taken by a "
+        f"concurrent writer; re-read and retry the operation"
     )
 
 
@@ -318,8 +225,8 @@ def _write_data_files(
     kept = []
     fs = None
     for uri in files:
-        path = uri[5:] if uri.startswith("file:") else uri
-        if "://" in path:  # remote: can't cheaply check, keep
+        path = tablelog.local_path(uri)
+        if path is None:  # remote: can't cheaply check, keep
             kept.append(uri)
             continue
         try:
@@ -345,10 +252,7 @@ class SnapshotConstraintError(ValueError):
 def _tip_constraints(spark: SparkSession, table: str) -> dict[str, str]:
     """The table's active constraints as of the current tip (empty for a
     new or unconstrained table)."""
-    versions = list_versions(spark, table)
-    if not versions:
-        return {}
-    return _read_manifest(spark, table, versions[-1]).get("constraints") or {}
+    return tablelog.tip(table, spark)[1].get("constraints") or {}
 
 
 def _validate_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
@@ -366,19 +270,12 @@ def _validate_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
             )
 
 
-# MANIFEST FACT KEYS — the carry checklist. Any new key added to a
-# manifest must be threaded through EVERY commit path or it is silently
-# lost on the next commit of that path:
-#   via _commit inheritance (all data ops): file_stats (explicit arg),
-#     file_blooms, constraints, dv, txn, column_mapping, retired_physical
-#   hand-built manifests (explicit copy lists — grep these when adding a
-#     key): snapshot_drop_constraint, snapshot_rename_column,
-#     snapshot_drop_column, snapshot_restore (txn merges by max; clone
-#     deliberately omits txn — a fork is a new writer identity), and the
-#     DataSource writer pyds.SnapshotWriter.commit (append carries
-#     per-file facts + table facts; overwrite carries table facts only).
-# The review that added this list found three keys dropped exactly this
-# way (dv in drop_constraint, txn in the DS writer and restore).
+# MANIFEST FACT KEYS: every commit path builds its manifest with
+# ``tablelog.compose``, which carries each key from the tip (the rules are
+# listed there). Only op-specific keys are added by hand after it:
+# snapshot_restore (restored_from), snapshot_clone (cloned_from; drops
+# txn — a fork is a new writer identity), snapshot_rename_column
+# (renamed) and snapshot_drop_column (dropped, plus the retired name).
 
 
 def _commit(
@@ -397,7 +294,12 @@ def _commit(
     column_mapping: dict | None = None,
     constraints_validated: dict | None = None,
 ) -> int:
-    """``column_mapping``: explicit logical→physical map describing how
+    """Compose ``files`` into the next manifest (``tablelog.compose``:
+    facts left None inherit from the tip) and claim it — exactly
+    ``expected_version`` for a state-dependent commit, else the next
+    free version.
+
+    ``column_mapping``: explicit logical→physical map describing how
     THIS commit's files store their columns (a per-file fact, like
     stats). Schema-replacing commits pass the mapping their files were
     actually written with — inheriting the claim-time tip's instead
@@ -407,174 +309,49 @@ def _commit(
     ``df`` against; when the inherited tip constraints differ (a racing
     ADD CONSTRAINT), the commit re-validates before claiming so no
     unchecked rows ride in."""
-    committed_schema = schema or df.schema
-    arg_constraints, arg_blooms, arg_dv = constraints, file_blooms, dv
-    arg_mapping = column_mapping
-    attempts = 1 if expected_version is not None else _MAX_COMMIT_RETRIES
-    for _attempt in range(attempts):
-        constraints, file_blooms, dv = arg_constraints, arg_blooms, arg_dv
-        txn_map = {}
-        column_mapping = None
-        retired_physical = None
-        versions = list_versions(df.sparkSession, table)
-        # one tip read serves both inheritances: constraints are
-        # table-level facts every commit carries forward unchanged unless
-        # explicitly replacing them (snapshot_add/drop_constraint), and
-        # bloom entries are PER-FILE facts about immutable files — any
-        # entry whose file this commit still references stays valid
-        # verbatim. Ops that rewrite files produce new names, so stale
-        # bloom entries can't survive; new/rewritten files are simply
-        # unindexed (conservative). Best-effort: absence is safe.
-        try:
-            tip_m = (
-                _read_manifest(df.sparkSession, table, versions[-1])
-                if versions
-                else {}
-            )
-        except Exception:
-            tip_m = {}
-        if constraints is None:
-            constraints = tip_m.get("constraints") or {}
-            if (
-                constraints_validated is not None
-                and constraints != constraints_validated
-            ):
-                # a racer's ADD/DROP CONSTRAINT landed after the caller
-                # validated df — the inherited set binds this commit, so
-                # re-check before claiming (raises on violation; the
-                # caller's except path reclaims its files)
-                _validate_constraints(df, constraints)
-        if file_blooms is None:
-            prev = tip_m.get("file_blooms") or {}
-            inherited = {f: prev[f] for f in files if f in prev}
-            if inherited:
-                file_blooms = inherited
-        if dv is None:
-            # deletion vectors are per-file facts like blooms: entries
-            # survive exactly as long as their data file stays referenced
-            # (a rewriting op drops the file, and with it the dead rows),
-            # and the sidecar list rides along while any entry survives
-            prev_dv = tip_m.get("dv") or {}
-            prev_card = prev_dv.get("cardinality") or {}
-            inherited_card = {f: prev_card[f] for f in files if f in prev_card}
-            if inherited_card:
-                dv = {
-                    "sidecars": prev_dv.get("sidecars") or [],
-                    "cardinality": inherited_card,
-                }
-        # idempotent-writer watermarks ride the TIP (not the whole log):
-        # one manifest read answers "was (app, version) already applied",
-        # and vacuum dropping old manifests can't forget a watermark
-        txn_map = dict(tip_m.get("txn") or {})
-        # column mapping rides every commit: entries for logical names
-        # still in the committed schema persist; a vanished logical
-        # (overwrite with a redefined schema) just drops its entry — the
-        # only schema-redefining path through here is overwrite, which
-        # replaces every file, so nothing can resurrect and NO retirement
-        # is added (retiring here once bricked the revert-a-rename case:
-        # the vanished logical's physical equalled a committed column).
-        # Genuine retirement happens in snapshot_drop_column only.
-        prev_map = tip_m.get("column_mapping") or {}
-        src_map = arg_mapping if arg_mapping is not None else prev_map
-        if src_map or tip_m.get("retired_physical"):
-            names = set(committed_schema.names)
-            column_mapping = {
-                l: p for l, p in src_map.items() if l in names
-            }
-            retired_physical = list(tip_m.get("retired_physical") or [])
-        manifest = {
-            "operation": operation,
-            "files": files,
-            "schema": json.loads(committed_schema.json()),
-            "committed_at_unix": round(time.time(), 3),
-        }
-        if txn is not None:
-            app_id, v = txn
-            txn_map[app_id] = max(int(v), int(txn_map.get(app_id, v)))
-        if txn_map:
-            manifest["txn"] = txn_map
-        if column_mapping:
-            manifest["column_mapping"] = column_mapping
-        if retired_physical:
-            manifest["retired_physical"] = retired_physical
-        if file_stats:
-            manifest["file_stats"] = file_stats
-        if file_blooms:
-            manifest["file_blooms"] = file_blooms
-        if constraints:
-            manifest["constraints"] = constraints
-        if dv and dv.get("cardinality"):
-            manifest["dv"] = dv
-        if app:
-            # application metadata rides the commit ATOMICALLY (Delta's
-            # txn/commitInfo analog): e.g. the materialized-view watermark
-            # advances in the same manifest write that publishes the mart
-            # content, so no crash window can separate the two
-            manifest["app"] = app
-        if expected_version is not None:
-            # state-DEPENDENT: claim exactly the caller's version; a race
-            # raises SnapshotConflictError for the caller to recompute
-            return _try_commit(
-                df.sparkSession, table, manifest, expected_version
-            )
-        # state-INDEPENDENT (overwrite/restore-style): content needs no
-        # recompute on a race, but the inherited TABLE FACTS (constraints,
-        # txn watermarks, column mapping) were read from a tip a racer may
-        # have superseded — losing the claim loops back to RE-INHERIT from
-        # the new tip instead of blindly bumping the version number, so a
-        # racing ADD CONSTRAINT or watermark advance is never erased
-        claim = (versions[-1] + 1) if versions else 1
-        if _claim_version(df.sparkSession, table, manifest, claim):
-            return claim
-    raise RuntimeError(
-        f"snapshot commit lost {_MAX_COMMIT_RETRIES} consecutive version "
-        f"races on {table} — runaway concurrent writer loop?"
-    )
+    spark = df.sparkSession
+    committed_schema = json.loads((schema or df.schema).json())
 
-
-def _stat_norm(v):
-    """Canonical JSON-portable form for a stats/probe value. Numerics,
-    strings and bools pass through; datetimes and dates become a FIXED-
-    WIDTH UTC-naive ISO string (``YYYY-MM-DDTHH:MM:SS.ffffff`` — dates
-    midnight-extended) whose lexicographic order equals chronological
-    order, so every ``<=`` pruning comparison keeps working across the
-    manifest JSON round-trip. The same function normalizes PROBE values
-    at the compare sites: stats and probes must land in the identical
-    canonical form or boundary-equality probes would mis-prune (a
-    tz-aware "…+00:00" string sorts after its naive twin).
-
-    A NAIVE datetime is treated as HOST-LOCAL, because that is what the
-    actual filter does: PySpark's ``TimestampType.toInternal`` converts a
-    naive literal via ``time.mktime(dt.timetuple())`` (host zone), so on
-    a non-UTC host a naive probe passed through as-UTC would disagree
-    with the filter by the UTC offset and silently skip files containing
-    matching rows. The conversion here IS ``time.mktime`` — not
-    ``astimezone()`` — because the two disagree by an hour for
-    DST-ambiguous or nonexistent local times (mktime resolves with
-    ``tm_isdst=-1``, astimezone with ``fold=0``; ADVICE r10), and a
-    probe in a DST transition hour must land exactly where the filter
-    does. Footer stats are never naive (pyarrow returns tz-aware UTC for
-    Spark's TIMESTAMP_MICROS), so this branch only ever sees user probe
-    values.
-    Mirrored in sources/pyds.py (self-contained by design) — keep the
-    two definitions bit-identical."""
-    import datetime as _dt
-    import time as _time
-
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            # the TimestampType.toInternal twin: int(mktime) seconds +
-            # carried microseconds
-            v = _dt.datetime.fromtimestamp(
-                int(_time.mktime(v.timetuple())), _dt.timezone.utc
-            ) + _dt.timedelta(microseconds=v.microsecond)
-        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return v.isoformat(timespec="microseconds")
-    if isinstance(v, _dt.date):
-        return _dt.datetime(v.year, v.month, v.day).isoformat(
-            timespec="microseconds"
+    def build(tip_m: dict) -> dict:
+        inherited = tip_m.get("constraints") or {}
+        if (
+            constraints is None
+            and constraints_validated is not None
+            and inherited != constraints_validated
+        ):
+            # a racer's ADD/DROP CONSTRAINT landed after the caller
+            # validated df — the inherited set binds this commit, so
+            # re-check before claiming (raises on violation; the
+            # caller's except path reclaims its files)
+            _validate_constraints(df, inherited)
+        return tablelog.compose(
+            tip_m,
+            operation,
+            files,
+            committed_schema,
+            file_stats=file_stats,
+            file_blooms=file_blooms,
+            constraints=constraints,
+            dv=dv,
+            txn=dict([txn]) if txn is not None else None,
+            column_mapping=column_mapping,
+            app=app,
         )
-    return v
+
+    if expected_version is not None:
+        # state-DEPENDENT: claim exactly the caller's version; a race
+        # raises SnapshotConflictError for the caller to recompute
+        manifest = build(tablelog.tip(table, spark)[1])
+        return _try_commit(spark, table, manifest, expected_version)
+    # state-INDEPENDENT (overwrite-style): content needs no recompute on
+    # a race, but the inherited table facts do — each retry re-composes
+    # against the new tip
+    return tablelog.commit_next(
+        table,
+        build,
+        spark,
+        claim=lambda manifest, v: _claim_version(spark, table, manifest, v),
+    )
 
 
 def _collect_file_stats(
@@ -595,8 +372,8 @@ def _collect_file_stats(
         return None
     out: dict = {}
     for uri in files:
-        path = uri[5:] if uri.startswith("file:") else uri
-        if "://" in path:
+        path = tablelog.local_path(uri)
+        if path is None:
             return None
         try:
             meta = pq.ParquetFile(path).metadata
@@ -638,24 +415,6 @@ def _collect_file_stats(
     return out
 
 
-def _file_may_contain(stats_row, values: list, want_null: bool) -> bool:
-    """Conservative pruning predicate: can this file hold any of the
-    delta's partition values? Unknown stats → True (rewrite, stay
-    correct)."""
-    lo, hi, has_null = stats_row
-    if want_null and has_null:
-        return True
-    if lo is None:  # empty file
-        return False
-    for v in values:
-        try:
-            if lo <= _stat_norm(v) <= hi:
-                return True
-        except TypeError:  # cross-type compare: be conservative
-            return True
-    return False
-
-
 # ---- column mapping: metadata-only RENAME / DROP COLUMN -------------------
 #
 # Delta's column-mapping (name mode) rebuilt on the manifest: every data
@@ -680,10 +439,7 @@ def _tip_column_mapping(spark: SparkSession, table: str) -> tuple[dict, list]:
     """(column_mapping, retired_physical) at the tip; ({}, []) for a new
     or never-renamed table."""
     try:
-        versions = list_versions(spark, table)
-        if not versions:
-            return {}, []
-        m = _read_manifest(spark, table, versions[-1])
+        m = tablelog.tip(table, spark)[1]
     except Exception:
         return {}, []
     return m.get("column_mapping") or {}, m.get("retired_physical") or []
@@ -710,9 +466,7 @@ def snapshot_detail(spark: SparkSession, table: str) -> DataFrame:
     presence, and the commit timestamp. The at-a-glance health check an
     operator runs before deciding on OPTIMIZE / purge / vacuum."""
     versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    m = _read_manifest(spark, table, versions[-1])
+    v, m = tablelog.pin(table, spark=spark)
     fs, _, jvm = _fs(spark, table)
     size = 0
     for f in m["files"]:
@@ -723,7 +477,7 @@ def snapshot_detail(spark: SparkSession, table: str) -> DataFrame:
             break
     dv = m.get("dv") or {}
     row = {
-        "version": versions[-1],
+        "version": v,
         "num_versions": len(versions),
         "operation": m.get("operation"),
         "num_files": len(m["files"]),
@@ -798,18 +552,13 @@ def snapshot_overwrite(
     spark = df.sparkSession
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
+    v_pre, tip_pre = tablelog.tip(table, spark)
     if txn_app_id is not None:
         # idempotent writer protocol, same contract as snapshot_append:
         # an already-applied (app, version) no-ops before writing a byte
-        versions0 = list_versions(spark, table)
-        if versions0:
-            seen = _read_manifest(spark, table, versions0[-1]).get("txn") or {}
-            if int(seen.get(txn_app_id, -1)) >= int(txn_version):
-                return versions0[-1]
-    versions_pre = list_versions(spark, table)
-    tip_pre = (
-        _read_manifest(spark, table, versions_pre[-1]) if versions_pre else {}
-    )
+        seen = tip_pre.get("txn") or {}
+        if v_pre and int(seen.get(txn_app_id, -1)) >= int(txn_version):
+            return v_pre
     cons_seen = tip_pre.get("constraints") or {}
     _validate_constraints(df, cons_seen)
     mapping = tip_pre.get("column_mapping") or {}
@@ -913,18 +662,11 @@ def snapshot_append(
     spark = df.sparkSession
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
+    v_pre, tip_pre = tablelog.tip(table, spark)
     if txn_app_id is not None:
-        versions0 = list_versions(spark, table)
-        if versions0:
-            seen = (
-                _read_manifest(spark, table, versions0[-1]).get("txn") or {}
-            )
-            if int(seen.get(txn_app_id, -1)) >= int(txn_version):
-                return versions0[-1]  # already applied: exactly-once no-op
-    versions_pre = list_versions(spark, table)
-    tip_pre = (
-        _read_manifest(spark, table, versions_pre[-1]) if versions_pre else {}
-    )
+        seen = tip_pre.get("txn") or {}
+        if v_pre and int(seen.get(txn_app_id, -1)) >= int(txn_version):
+            return v_pre  # already applied: exactly-once no-op
     cons_seen = tip_pre.get("constraints") or {}
     _validate_constraints(df, cons_seen)
     new_files = _write_data_files(df, table, tip_manifest=tip_pre)
@@ -932,10 +674,7 @@ def snapshot_append(
     ret_pre = tip_pre.get("retired_physical") or []
     new_stats_cache: dict[tuple[str, ...], dict | None] = {}
     for _ in range(_MAX_COMMIT_RETRIES):
-        versions = list_versions(spark, table)
-        prev_manifest = (
-            _read_manifest(spark, table, versions[-1]) if versions else {}
-        )
+        v_tip, prev_manifest = tablelog.tip(table, spark)
         # Delta-style concurrent-METADATA detection: the delta files were
         # written with the pre-write tip's column mapping and retired set;
         # a racer's rename/drop landing since would make the committed
@@ -965,7 +704,6 @@ def snapshot_append(
                 raise
             cons_seen = cons_now
         prev = prev_manifest.get("files", [])
-        prev_stats = prev_manifest.get("file_stats") or {}
         schema = df.schema
         if prev_manifest.get("schema") is not None:
             try:
@@ -979,36 +717,27 @@ def snapshot_append(
                 # never would)
                 _delete_files(spark, new_files)
                 raise
-        # stats continuity: carry the tip's per-file stats and collect the
-        # same columns for this append's files, so a stats-pruned table
-        # (merge_partitioned / overwrite(stats_cols=...)) keeps whole-file
-        # skipping across appends instead of silently losing it
-        file_stats = None
-        stats_cols = tuple(_prev_stats_cols(prev_stats))
-        if stats_cols:
-            if stats_cols not in new_stats_cache:
-                new_stats_cache[stats_cols] = _collect_file_stats(
-                    new_files,
-                    list(stats_cols),
-                    prev_manifest.get("column_mapping") or {},
-                )
-            file_stats = {**prev_stats, **(new_stats_cache[stats_cols] or {})}
+        # stats continuity: the tip's per-file stats carry (compose), and
+        # the same columns are collected for this append's files, so a
+        # stats-pruned table (merge_partitioned / overwrite(stats_cols=...))
+        # keeps whole-file skipping across appends instead of losing it
+        stats_cols = tuple(_prev_stats_cols(prev_manifest.get("file_stats") or {}))
+        if stats_cols not in new_stats_cache:
+            new_stats_cache[stats_cols] = _new_file_stats(
+                new_files, prev_manifest
+            )
         if txn_app_id is not None:
             seen = prev_manifest.get("txn") or {}
             if int(seen.get(txn_app_id, -1)) >= int(txn_version):
                 # a racer (same app) applied this version while we wrote:
                 # reclaim our files and report the tip — still at-most-once
                 _delete_files(spark, new_files)
-                return versions[-1]
-        nxt = (versions[-1] + 1) if versions else 1
+                return v_tip
         try:
             return _commit(
-                df, table, "append", prev + new_files, file_stats,
-                expected_version=nxt, schema=schema,
-                # every prior file stays referenced by an append, so its
-                # bloom entry (snapshot_bloom_index) stays valid verbatim;
-                # this commit's files simply have none yet (conservative)
-                file_blooms=prev_manifest.get("file_blooms"),
+                df, table, "append", prev + new_files,
+                new_stats_cache[stats_cols],
+                expected_version=v_tip + 1, schema=schema,
                 txn=(txn_app_id, int(txn_version))
                 if txn_app_id is not None
                 else None,
@@ -1044,7 +773,7 @@ def snapshot_append(
 
 def _dv_norm_path_expr(col):
     """file:///x, file:/x and /x all name the same local path — the Spark
-    expression twin of :func:`_norm_uri`, applied to
+    expression twin of :func:`tablelog.norm_uri`, applied to
     ``_metadata.file_path`` so scan-reported paths join against the
     normalized paths the sidecars store."""
     return F.regexp_replace(col, "^file:/+", "/")
@@ -1111,13 +840,7 @@ def snapshot_read(
     parquet read — pushdown, pruning and the vectorized reader all apply;
     an empty snapshot returns an empty DataFrame with the manifest's
     schema (a zero-file parquet read has no schema to infer)."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    manifest = _read_manifest(spark, table, v)
+    _, manifest = tablelog.pin(table, version, spark)
     schema = StructType.fromJson(manifest["schema"])
     # pin the schema from the manifest: mixed historic widths across
     # commits must resolve to the COMMITTED schema, not scan-order luck;
@@ -1146,30 +869,12 @@ def snapshot_scan(
     ``snapshot_merge_partitioned(..., stats_cols=[column])``."""
     from pyspark.sql import functions as F
 
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    manifest = _read_manifest(spark, table, v)
-    stats = manifest.get("file_stats") or {}
-    # probes meet stats in the stats' canonical form (timestamps/dates
-    # are ISO strings in the manifest)
-    plo, phi = _stat_norm(lo), _stat_norm(hi)
-
-    def may_intersect(f: str) -> bool:
-        row = stats.get(f, {}).get(column)
-        if row is None:
-            return True  # no stats: must read
-        fmin, fmax, _null = row
-        if fmin is None:  # stats say the file is empty
-            return False
-        try:
-            return fmin <= phi and plo <= fmax
-        except TypeError:
-            return True  # cross-type compare: be conservative
-    files = [f for f in manifest["files"] if may_intersect(f)]
+    _, manifest = tablelog.pin(table, version, spark)
+    files = tablelog.prune(
+        manifest["files"],
+        manifest.get("file_stats"),
+        {column: {"lo": lo, "hi": hi}},
+    )
     schema = StructType.fromJson(manifest["schema"])
     pred = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
     return _read_data_files(spark, schema, files, manifest).filter(pred)
@@ -1414,9 +1119,7 @@ def _try_rebase_partitioned(
     touched: list[str],
     new_files: list[str],
     new_stats: dict | None,
-    partition_col: str,
-    values: list,
-    want_null: bool,
+    probe: dict,
     manifest_df: DataFrame,
     schema: "StructType | None" = None,
 ) -> int | None:
@@ -1430,8 +1133,9 @@ def _try_rebase_partitioned(
     1. every racer op is in ``_REBASEABLE_OPS`` (no overwrite);
     2. the tip still references every file this merge rewrote
        (``touched``) — no racer touched the same files; and
-    3. every file the racers ADDED (tip ∖ base) carries ``partition_col``
-       stats proving it holds none of this merge's partition values —
+    3. every file the racers ADDED (tip ∖ base) carries partition-column
+       stats proving it holds none of this merge's partition values
+       (``probe``, the ``tablelog.file_may_match`` bounds) —
        with partition_col functionally dependent on the merge keys
        (the documented contract), no racer row can collide with a delta
        key. Files without stats fail the test (conservative).
@@ -1455,25 +1159,17 @@ def _try_rebase_partitioned(
         if not set(touched) <= tip_files:
             return None
         tip_stats = tip.get("file_stats") or {}
-        for f in tip_files - set(base_files):
-            row = tip_stats.get(f, {}).get(partition_col)
-            if row is None or _file_may_contain(row, values, want_null):
-                return None
+        if tablelog.prune(sorted(tip_files - set(base_files)), tip_stats, probe):
+            return None
         touched_set = set(touched)
         rebased_files = [f for f in tip["files"] if f not in touched_set]
-        file_stats = None
-        if new_stats is not None:
-            file_stats = {
-                **{f: tip_stats[f] for f in rebased_files if f in tip_stats},
-                **new_stats,
-            }
         try:
             return _commit(
                 manifest_df,
                 table,
                 "merge",
                 rebased_files + new_files,
-                file_stats,
+                new_stats,
                 expected_version=tip_v + 1,
                 schema=schema,
             )
@@ -1543,11 +1239,11 @@ def snapshot_merge_partitioned(
             f"distinct '{partition_col}' values — key-grade cardinality; "
             f"partition by a coarser derived column or use snapshot_merge."
         )
-    values = [p for p in parts if p is not None]
-    want_null = any(p is None for p in parts)
+    # NULL rides in the probe as None: it matches files holding NULLs
+    probe = {partition_col: {"values": parts}}
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
+        tip_v, manifest = tablelog.tip(table, spark)
+        if not tip_v:
             files = _write_data_files(clustered(df), table)
             try:
                 return _commit(
@@ -1561,16 +1257,8 @@ def snapshot_merge_partitioned(
             except SnapshotConflictError:
                 _delete_files(spark, files)  # racer created v1: re-merge
                 continue
-        manifest = _read_manifest(spark, table, versions[-1])
         prev_files = manifest["files"]
-        prev_stats = manifest.get("file_stats") or {}
-        touched, carried = [], []
-        for f in prev_files:
-            row = prev_stats.get(f, {}).get(partition_col)
-            if row is not None and not _file_may_contain(row, values, want_null):
-                carried.append(f)
-            else:
-                touched.append(f)
+        touched, carried = _split_by_stats(manifest, probe)
         schema = StructType.fromJson(manifest["schema"])
         if touched:
             existing = _read_data_files(spark, schema, touched, manifest)
@@ -1593,21 +1281,14 @@ def snapshot_merge_partitioned(
         new_stats = _collect_file_stats(
             new_files, all_stats_cols, manifest.get("column_mapping") or {}
         )
-        file_stats = None
-        if new_stats is not None:
-            # carried files keep their stats; absent entries stay conservative
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **new_stats,
-            }
         try:
             return _commit(
                 df,
                 table,
                 "merge",
                 carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
+                new_stats,
+                expected_version=tip_v + 1,
                 schema=schema,
                 # racing ADD CONSTRAINT: re-check the delta at claim time
                 # (the rebase path never sees one — constraint ops are not
@@ -1626,14 +1307,12 @@ def snapshot_merge_partitioned(
             rebased = _try_rebase_partitioned(
                 spark,
                 table,
-                base_version=versions[-1],
+                base_version=tip_v,
                 base_files=prev_files,
                 touched=touched,
                 new_files=new_files,
                 new_stats=new_stats,
-                partition_col=partition_col,
-                values=values,
-                want_null=want_null,
+                probe=probe,
                 manifest_df=df,
                 schema=schema,
             )
@@ -1668,43 +1347,41 @@ def snapshot_scan_multi(
 
     if not ranges:
         raise ValueError("ranges must name at least one column")
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    manifest = _read_manifest(spark, table, v)
-    stats = manifest.get("file_stats") or {}
-
-    # probes meet stats in the stats' canonical form (timestamps/dates
-    # are ISO strings in the manifest)
-    norm_ranges = {
-        c: (_stat_norm(lo), _stat_norm(hi)) for c, (lo, hi) in ranges.items()
-    }
-
-    def may_intersect(f: str) -> bool:
-        for column, (lo, hi) in norm_ranges.items():
-            row = stats.get(f, {}).get(column)
-            if row is None:
-                continue  # no stats for this column: can't prune on it
-            fmin, fmax, _null = row
-            if fmin is None:
-                return False  # stats say the file is empty
-            try:
-                if not (fmin <= hi and lo <= fmax):
-                    return False
-            except TypeError:
-                continue  # cross-type compare: be conservative
-        return True
-
-    files = [f for f in manifest["files"] if may_intersect(f)]
+    _, manifest = tablelog.pin(table, version, spark)
+    files = tablelog.prune(
+        manifest["files"],
+        manifest.get("file_stats"),
+        {c: {"lo": lo, "hi": hi} for c, (lo, hi) in ranges.items()},
+    )
     schema = StructType.fromJson(manifest["schema"])
     pred = None
     for column, (lo, hi) in ranges.items():
         c = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
         pred = c if pred is None else pred & c
     return _read_data_files(spark, schema, files, manifest).filter(pred)
+
+
+def _split_by_stats(manifest: dict, bounds: dict) -> tuple[list[str], list[str]]:
+    """(touched, carried): the manifest's files whose stats can't rule
+    out ``bounds`` (``tablelog.file_may_match``), and the rest — which the
+    next version carries by identity, zero I/O."""
+    files = manifest["files"]
+    touched = tablelog.prune(files, manifest.get("file_stats"), bounds)
+    hit = set(touched)
+    return touched, [f for f in files if f not in hit]
+
+
+def _new_file_stats(new_files: list[str], manifest: dict) -> dict | None:
+    """Footer stats for a rewrite's new files, for every column the tip
+    ``manifest`` tracks — so pruning survives the operation (the carried
+    files' entries ride along in ``tablelog.compose``). None when the tip
+    tracks no stats."""
+    stats_cols = _prev_stats_cols(manifest.get("file_stats") or {})
+    if not stats_cols:
+        return None
+    return _collect_file_stats(
+        new_files, stats_cols, manifest.get("column_mapping") or {}
+    )
 
 
 def _prev_stats_cols(prev_stats: dict) -> list[str]:
@@ -1751,31 +1428,10 @@ def snapshot_delete(
         )
         pred = pred & extra
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
-        prev_stats = manifest.get("file_stats") or {}
-        touched, carried = [], []
-        for f in manifest["files"]:
-            row = prev_stats.get(f, {}).get(column)
-            if row is not None and row[0] is not None:
-                fmin, fmax, _null = row
-                try:
-                    # probes meet stats in canonical form (_stat_norm)
-                    disjoint = not (
-                        fmin <= _stat_norm(hi) and _stat_norm(lo) <= fmax
-                    )
-                except TypeError:
-                    disjoint = False
-                (carried if disjoint else touched).append(f)
-            elif row is not None:  # stats say the file is empty
-                carried.append(f)
-            else:
-                touched.append(f)
+        tip_v, manifest = tablelog.pin(table, spark=spark)
+        touched, carried = _split_by_stats(manifest, {column: {"lo": lo, "hi": hi}})
         schema = StructType.fromJson(manifest["schema"])
         new_files: list[str] = []
-        new_stats = None
         if touched:
             # the shared read path applies any deletion vectors on the
             # touched files, so the rewrite can't resurrect dead rows
@@ -1783,17 +1439,6 @@ def snapshot_delete(
                 ~F.coalesce(pred, F.lit(False))
             )
             new_files = _write_data_files(survivors, table, tip_manifest=manifest)
-            stats_cols = _prev_stats_cols(prev_stats)
-            if stats_cols:
-                new_stats = _collect_file_stats(
-                    new_files, stats_cols, manifest.get("column_mapping") or {}
-                )
-        file_stats = None
-        if prev_stats:
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **(new_stats or {}),
-            }
         placeholder = spark.createDataFrame([], schema)
         try:
             return _commit(
@@ -1801,8 +1446,8 @@ def snapshot_delete(
                 table,
                 "delete",
                 carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
+                _new_file_stats(new_files, manifest),
+                expected_version=tip_v + 1,
             )
         except SnapshotConflictError:
             _delete_files(spark, new_files)
@@ -1845,10 +1490,7 @@ def snapshot_replace_where(
     cons_seen = _tip_constraints(spark, table)
     _validate_constraints(df, cons_seen)
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
+        tip_v, manifest = tablelog.pin(table, spark=spark)
         cons_now = manifest.get("constraints") or {}
         if cons_now != cons_seen:
             # a racing ADD CONSTRAINT landed since the pre-loop check: the
@@ -1858,24 +1500,7 @@ def snapshot_replace_where(
             # were validated by the constraint-add's full-table pass.
             _validate_constraints(df, cons_now)
             cons_seen = cons_now
-        prev_stats = manifest.get("file_stats") or {}
-        touched, carried = [], []
-        for f in manifest["files"]:
-            row = prev_stats.get(f, {}).get(column)
-            if row is not None and row[0] is not None:
-                fmin, fmax, _null = row
-                try:
-                    # probes meet stats in canonical form (_stat_norm)
-                    disjoint = not (
-                        fmin <= _stat_norm(hi) and _stat_norm(lo) <= fmax
-                    )
-                except TypeError:
-                    disjoint = False
-                (carried if disjoint else touched).append(f)
-            elif row is not None:  # stats say the file is empty
-                carried.append(f)
-            else:
-                touched.append(f)
+        touched, carried = _split_by_stats(manifest, {column: {"lo": lo, "hi": hi}})
         schema = StructType.fromJson(manifest["schema"])
         replacement = df.select(*schema.names)
         if touched:
@@ -1884,20 +1509,6 @@ def snapshot_replace_where(
             )
             replacement = survivors.unionByName(replacement)
         new_files = _write_data_files(replacement, table, tip_manifest=manifest)
-        stats_cols = _prev_stats_cols(prev_stats)
-        new_stats = (
-            _collect_file_stats(
-                new_files, stats_cols, manifest.get("column_mapping") or {}
-            )
-            if stats_cols
-            else None
-        )
-        file_stats = None
-        if prev_stats:
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **(new_stats or {}),
-            }
         placeholder = spark.createDataFrame([], schema)
         try:
             return _commit(
@@ -1905,8 +1516,8 @@ def snapshot_replace_where(
                 table,
                 "replace_where",
                 carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
+                _new_file_stats(new_files, manifest),
+                expected_version=tip_v + 1,
             )
         except SnapshotConflictError:
             _delete_files(spark, new_files)
@@ -1937,11 +1548,7 @@ def snapshot_optimize(
     same columns the previous manifest tracked either way. No-op (returns
     the current version) when fewer than two files qualify."""
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
-        prev_stats = manifest.get("file_stats") or {}
+        tip_v, manifest = tablelog.pin(table, spark=spark)
         fs, _, jvm = _fs(spark, table)
         small, carried, small_bytes = [], [], 0
         for f in manifest["files"]:
@@ -1952,7 +1559,7 @@ def snapshot_optimize(
             else:
                 carried.append(f)
         if len(small) < 2:
-            return versions[-1]
+            return tip_v
         schema = StructType.fromJson(manifest["schema"])
         # DV-aware read: packing a file folds its deletion vector into
         # the rewrite, and _commit inheritance drops the entry with the
@@ -1969,20 +1576,6 @@ def snapshot_optimize(
         else:
             packed = packed.coalesce(n_out)
         new_files = _write_data_files(packed, table, tip_manifest=_tipm)
-        stats_cols = _prev_stats_cols(prev_stats)
-        new_stats = (
-            _collect_file_stats(
-                new_files, stats_cols, manifest.get("column_mapping") or {}
-            )
-            if stats_cols
-            else None
-        )
-        file_stats = None
-        if prev_stats:
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **(new_stats or {}),
-            }
         placeholder = spark.createDataFrame([], schema)
         try:
             return _commit(
@@ -1990,8 +1583,8 @@ def snapshot_optimize(
                 table,
                 "optimize",
                 carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
+                _new_file_stats(new_files, manifest),
+                expected_version=tip_v + 1,
             )
         except SnapshotConflictError:
             _delete_files(spark, new_files)
@@ -2006,16 +1599,11 @@ _CHECKPOINT_NAME = "_history_checkpoint.json"
 
 
 def _read_history_checkpoint(spark: SparkSession, table: str) -> dict | None:
-    path = f"{table.rstrip('/')}/{_MANIFEST_DIR}/{_CHECKPOINT_NAME}"
-    fs, hpath, jvm = _fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    stream = fs.open(hpath)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        return json.loads(data.decode("utf-8"))
-    finally:
-        stream.close()
+    return tablelog.read_json(
+        f"{table.rstrip('/')}/{_MANIFEST_DIR}/{_CHECKPOINT_NAME}",
+        spark,
+        missing_ok=True,
+    )
 
 
 def checkpoint_history(spark: SparkSession, table: str) -> int:
@@ -2051,33 +1639,14 @@ def checkpoint_history(spark: SparkSession, table: str) -> int:
         "upto": versions[-1],
         "rows": sorted(rows.values(), key=lambda r: r[0]),
     }
-    target_str = f"{table.rstrip('/')}/{_MANIFEST_DIR}/{_CHECKPOINT_NAME}"
-    data = json.dumps(payload, sort_keys=True).encode("utf-8")
-    local = (
-        "/" + target_str[5:].lstrip("/")
-        if target_str.startswith("file:")
-        else (target_str if "://" not in target_str else None)
+    # atomic replace: a concurrent history() reads either the old
+    # checkpoint or the new one, never partial bytes
+    tablelog.publish(
+        f"{table.rstrip('/')}/{_MANIFEST_DIR}/{_CHECKPOINT_NAME}",
+        json.dumps(payload, sort_keys=True).encode("utf-8"),
+        exclusive=False,
+        spark=spark,
     )
-    if local is not None:
-        # atomic replace: a concurrent history() must read either the
-        # old checkpoint or the new one, never partial bytes (same
-        # atomic-publish rule as _claim_version; rename(2) overwrites)
-        import os as _os
-
-        tmp = f"{local}.tmp-{uuid.uuid4().hex[:12]}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-            f.flush()
-            _os.fsync(f.fileno())
-        _os.replace(tmp, local)
-    else:
-        fs, _, jvm = _fs(spark, table)
-        target = jvm.org.apache.hadoop.fs.Path(target_str)
-        out = fs.create(target, True)
-        try:
-            out.write(bytearray(data))
-        finally:
-            out.close()
     return versions[-1]
 
 
@@ -2094,13 +1663,7 @@ def snapshot_files(
     tiny (OPTIMIZE?), which carry vectors (purge?), whether the
     clustering actually produced disjoint ranges (zorder verification) —
     all answered without touching data bytes."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    m = _read_manifest(spark, table, v)
+    _, m = tablelog.pin(table, version, spark)
     stats = m.get("file_stats") or {}
     card = (m.get("dv") or {}).get("cardinality") or {}
     try:
@@ -2115,8 +1678,8 @@ def snapshot_files(
         except Exception:
             size = None
         n_rows = None
-        local = f[5:] if f.startswith("file:") else f
-        if pq is not None and "://" not in local:
+        local = tablelog.local_path(f)
+        if pq is not None and local is not None:
             try:
                 n_rows = pq.ParquetFile(local).metadata.num_rows
             except OSError:
@@ -2183,39 +1746,27 @@ def snapshot_restore(spark: SparkSession, table: str, version: int) -> int:
     Deliberately NOT rebaseable by racing merges: like overwrite, a
     restore replaces table state wholesale, so concurrent
     state-dependent writers must recompute against it."""
-    versions = list_versions(spark, table)
-    if version not in versions:
-        raise ValueError(
-            f"version {version} not in {table} (have {versions})"
+    _, m = tablelog.pin(table, version, spark)
+
+    def build(tip_m: dict) -> dict:
+        # the restored manifest is the base its facts carry from (stats,
+        # blooms and deletion vectors travel with the restored file list;
+        # constraints are part of the restored state) — except txn:
+        # idempotent-writer watermarks are HIGH-WATER marks, not state,
+        # so the tip's max-merge in and an already-applied (app, version)
+        # can never re-apply after a rollback
+        out = tablelog.compose(
+            m, "restore", m["files"], m["schema"], txn=tip_m.get("txn")
         )
-    m = _read_manifest(spark, table, version)
-    tip_txn = _read_manifest(spark, table, versions[-1]).get("txn") or {}
-    manifest = {
-        "operation": "restore",
-        "restored_from": version,
-        "files": m["files"],
-        "schema": m["schema"],
-        "committed_at_unix": round(time.time(), 3),
-    }
-    if m.get("file_stats"):
-        manifest["file_stats"] = m["file_stats"]
-    for key in ("file_blooms", "dv", "constraints", "column_mapping",
-                "retired_physical"):
-        # per-file facts (blooms, deletion vectors) travel with the
-        # restored file list; constraints are part of the restored state
-        if m.get(key):
-            manifest[key] = m[key]
-    # idempotent-writer watermarks are HIGH-WATER marks, not state: a
-    # restore rolls data back but must never let an already-applied
-    # (app, version) re-apply — take the element-wise max of both maps
-    restored_txn = m.get("txn") or {}
-    merged_txn = {
-        a: max(int(restored_txn.get(a, -1)), int(tip_txn.get(a, -1)))
-        for a in set(restored_txn) | set(tip_txn)
-    }
-    if merged_txn:
-        manifest["txn"] = merged_txn
-    return _try_commit(spark, table, manifest, expected_version=None)
+        out["restored_from"] = version
+        return out
+
+    return tablelog.commit_next(
+        table,
+        build,
+        spark,
+        claim=lambda manifest, v: _claim_version(spark, table, manifest, v),
+    )
 
 
 def version_at_timestamp(spark: SparkSession, table: str, ts_unix: float) -> int:
@@ -2254,13 +1805,7 @@ def snapshot_count(
     distributed count when any file is non-local or unreadable (remote
     object stores want a ranged footer fetch this sandbox can't do) —
     callers always get the exact answer either way."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    m = _read_manifest(spark, table, v)
+    v, m = tablelog.pin(table, version, spark)
     files = m["files"]
     # merge-on-read deletes stay metadata-only too: the manifest records
     # the dead-row count per file, so COUNT = footer rows - cardinality
@@ -2270,8 +1815,8 @@ def snapshot_count(
 
         total = 0
         for uri in files:
-            path = uri[5:] if uri.startswith("file:") else uri
-            if "://" in path:
+            path = tablelog.local_path(uri)
+            if path is None:
                 raise OSError("non-local file")
             total += pq.ParquetFile(path).metadata.num_rows
         return total - sum(dead.get(f, 0) for f in files)
@@ -2365,13 +1910,15 @@ def vacuum(
     # A shallow clone (snapshot_clone) references the SOURCE table's
     # files — expiring the clone's history must never reach into the
     # source's directory (the clone doesn't own those bytes).
-    own_root = _norm_uri(table).rstrip("/") + "/"
-    doomed = {f for f in doomed if _norm_uri(f).startswith(own_root)}
+    own_root = tablelog.norm_uri(table).rstrip("/") + "/"
+    doomed = {f for f in doomed if tablelog.norm_uri(f).startswith(own_root)}
     fs, _, jvm = _fs(spark, table)
     for f in sorted(doomed):
         fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
     for v in dropped:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(_manifest_path(table, v)), False)
+        fs.delete(
+            jvm.org.apache.hadoop.fs.Path(tablelog.manifest_path(table, v)), False
+        )
     # crash janitoring for the atomic-publish protocol: a writer that died
     # between writing a ``v*.json.tmp-*`` payload and linking it is the
     # only way a tmp file outlives its commit attempt — no live commit
@@ -2398,9 +1945,9 @@ def vacuum(
         tracked = set()
         for v in list_versions(spark, table):
             m = _read_manifest(spark, table, v)
-            tracked.update(_norm_uri(f) for f in m["files"])
             tracked.update(
-                _norm_uri(s) for s in (m.get("dv") or {}).get("sidecars") or []
+                tablelog.norm_uri(f)
+                for f in m["files"] + ((m.get("dv") or {}).get("sidecars") or [])
             )
         orphan_cutoff_ms = (time.time() - orphan_age_seconds) * 1000
         for sub in (_DATA_DIR, _DV_DIR):
@@ -2411,7 +1958,7 @@ def vacuum(
             while it.hasNext():
                 st = it.next()
                 p = st.getPath()
-                if _norm_uri(p.toString()) in tracked:
+                if tablelog.norm_uri(p.toString()) in tracked:
                     continue
                 if st.getModificationTime() >= orphan_cutoff_ms:
                     continue  # could be an in-flight commit's file
@@ -2432,14 +1979,6 @@ def vacuum(
 # in the JVM (xxhash64(value, seed)): the probe computes the lookup
 # value's bit positions through the SAME Spark expression as the build,
 # so there is no Python reimplementation to drift.
-
-
-def _norm_uri(uri: str) -> str:
-    """file:///x, file:/x and /x all name the same local path."""
-    if uri.startswith("file:"):
-        rest = uri[5:].lstrip("/")
-        return "/" + rest
-    return uri
 
 
 def _bloom_positions_expr(value_col, num_bits: int, num_hashes: int):
@@ -2482,11 +2021,7 @@ def snapshot_bloom_index(
     1k distinct values per file."""
     if num_bits % 8:
         raise ValueError("num_bits must be a multiple of 8")
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    tip = versions[-1]
-    manifest = _read_manifest(spark, table, tip)
+    tip, manifest = tablelog.pin(table, spark=spark)
     schema = StructType.fromJson(manifest["schema"])
     if column not in schema.names:
         raise ValueError(f"column {column!r} not in table schema {schema.names}")
@@ -2513,9 +2048,9 @@ def snapshot_bloom_index(
             .groupBy("_f")
             .agg(F.collect_set("_p").alias("_ps"))
         )
-        by_norm = {_norm_uri(f): f for f in files}
+        by_norm = {tablelog.norm_uri(f): f for f in files}
         for row in per_file.collect():  # O(files) rows — manifest-sized
-            f = by_norm.get(_norm_uri(row["_f"]))
+            f = by_norm.get(tablelog.norm_uri(row["_f"]))
             if f is None:
                 continue
             bits = bytearray(num_bits // 8)
@@ -2559,13 +2094,7 @@ def _point_lookup_files(
     either layer pass that layer conservatively."""
     if not isinstance(values, (list, tuple)):
         values = [values]
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    manifest = _read_manifest(spark, table, v)
+    _, manifest = tablelog.pin(table, version, spark)
     schema = StructType.fromJson(manifest["schema"])
     if column not in schema.names:
         raise ValueError(f"column {column!r} not in table schema {schema.names}")
@@ -2595,9 +2124,10 @@ def _point_lookup_files(
         )
         positions_by_cfg[(m, k)] = [list(p) for p in row["p"]]
 
+    probe = {column: {"values": list(values)}}
+
     def keep(f: str) -> bool:
-        st = stats.get(f, {}).get(column)
-        if st is not None and not _file_may_contain(st, list(values), False):
+        if not tablelog.file_may_match(stats.get(f, {}), probe):
             return False
         entry = blooms.get(f, {}).get(column)
         if entry is not None and not any(
@@ -2681,56 +2211,53 @@ def snapshot_add_constraint(
     table — and rejects with :class:`SnapshotConstraintError` on any
     FALSE row (NULL passes, SQL CHECK semantics). Express NOT NULL as
     ``col IS NOT NULL``."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    tip = versions[-1]
-    manifest = _read_manifest(spark, table, tip)
+    tip, manifest = tablelog.pin(table, spark=spark)
     active = dict(manifest.get("constraints") or {})
     if name in active:
         raise ValueError(f"constraint {name!r} already exists: {active[name]}")
-    df = snapshot_read(spark, table, tip)
-    _validate_constraints(df, {name: expression})
+    _validate_constraints(snapshot_read(spark, table, tip), {name: expression})
     active[name] = expression
-    return _commit(
-        df,
-        table,
-        "set_constraint",
-        manifest["files"],
-        manifest.get("file_stats"),
-        expected_version=tip + 1,
-        schema=StructType.fromJson(manifest["schema"]),
-        file_blooms=manifest.get("file_blooms"),
-        constraints=active,
-    )
+    return _set_constraints(spark, table, tip, manifest, active)
 
 
 def snapshot_drop_constraint(spark: SparkSession, table: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT: metadata-only commit removing the
     named constraint from the active set."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    tip = versions[-1]
-    manifest = _read_manifest(spark, table, tip)
+    tip, manifest = tablelog.pin(table, spark=spark)
     active = dict(manifest.get("constraints") or {})
     if name not in active:
         raise ValueError(f"no constraint named {name!r} (have {sorted(active)})")
     del active[name]
-    df = snapshot_read(spark, table, tip)
-    manifest2 = {
-        "operation": "set_constraint",
-        "files": manifest["files"],
-        "schema": manifest["schema"],
-        "committed_at_unix": round(time.time(), 3),
-    }
-    for key in ("file_stats", "file_blooms", "dv", "column_mapping",
-                "retired_physical", "txn"):
-        if manifest.get(key):
-            manifest2[key] = manifest[key]
-    if active:
-        manifest2["constraints"] = active
+    return _set_constraints(spark, table, tip, manifest, active)
+
+
+def _set_constraints(
+    spark: SparkSession, table: str, tip: int, manifest: dict, active: dict
+) -> int:
+    """Metadata-only commit of ``active`` as the constraint set over the
+    tip ``manifest`` (version ``tip``)."""
+    manifest2 = tablelog.compose(
+        manifest,
+        "set_constraint",
+        manifest["files"],
+        manifest["schema"],
+        constraints=active,
+    )
     return _try_commit(spark, table, manifest2, expected_version=tip + 1)
+
+
+def _rekeyed(manifest: dict, key: str, old: str, new: str | None) -> dict:
+    """``manifest[key]`` — per-file metadata keyed by LOGICAL column
+    (stats, blooms) — with column ``old`` renamed to ``new``, or dropped
+    when ``new`` is None."""
+    return {
+        f: {
+            (new if c == old else c): v
+            for c, v in per.items()
+            if c != old or new is not None
+        }
+        for f, per in (manifest.get(key) or {}).items()
+    }
 
 
 def _constraints_referencing(constraints: dict, col: str) -> list[str]:
@@ -2756,11 +2283,7 @@ def snapshot_rename_column(
     silently stop binding (drop the constraint first, re-add against the
     new name)."""
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        tip = versions[-1]
-        manifest = _read_manifest(spark, table, tip)
+        tip, manifest = tablelog.pin(table, spark=spark)
         schema = StructType.fromJson(manifest["schema"])
         if old not in schema.names:
             raise ValueError(f"no column {old!r} in {table} ({schema.names})")
@@ -2791,32 +2314,17 @@ def snapshot_rename_column(
             else f
             for f in schema.fields
         ]
-        manifest2 = {
-            "operation": "rename_column",
-            "renamed": {"from": old, "to": new},
-            "files": manifest["files"],
-            "schema": json.loads(StructType(fields).json()),
-            "committed_at_unix": round(time.time(), 3),
-            "column_mapping": mapping,
-        }
-        if retired:
-            manifest2["retired_physical"] = retired
         # manifest metadata is logical-keyed: move old → new in place
-        stats = manifest.get("file_stats")
-        if stats:
-            manifest2["file_stats"] = {
-                f: {(new if c == old else c): v for c, v in per.items()}
-                for f, per in stats.items()
-            }
-        blooms = manifest.get("file_blooms")
-        if blooms:
-            manifest2["file_blooms"] = {
-                f: {(new if c == old else c): v for c, v in per.items()}
-                for f, per in blooms.items()
-            }
-        for key in ("constraints", "dv", "txn"):
-            if manifest.get(key):
-                manifest2[key] = manifest[key]
+        manifest2 = tablelog.compose(
+            manifest,
+            "rename_column",
+            manifest["files"],
+            json.loads(StructType(fields).json()),
+            file_stats=_rekeyed(manifest, "file_stats", old, new),
+            file_blooms=_rekeyed(manifest, "file_blooms", old, new),
+            column_mapping=mapping,
+        )
+        manifest2["renamed"] = {"from": old, "to": new}
         try:
             return _try_commit(spark, table, manifest2, expected_version=tip + 1)
         except SnapshotConflictError:
@@ -2836,11 +2344,7 @@ def snapshot_drop_column(spark: SparkSession, table: str, col: str) -> int:
     path), so historic data can't resurrect under a re-added column.
     Refused while a CHECK constraint references the column."""
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        tip = versions[-1]
-        manifest = _read_manifest(spark, table, tip)
+        tip, manifest = tablelog.pin(table, spark=spark)
         schema = StructType.fromJson(manifest["schema"])
         if col not in schema.names:
             raise ValueError(f"no column {col!r} in {table} ({schema.names})")
@@ -2858,30 +2362,16 @@ def snapshot_drop_column(spark: SparkSession, table: str, col: str) -> int:
         phys = mapping.pop(col, col)
         retired = list(manifest.get("retired_physical") or []) + [phys]
         fields = [f for f in schema.fields if f.name != col]
-        manifest2 = {
-            "operation": "drop_column",
-            "dropped": col,
-            "files": manifest["files"],
-            "schema": json.loads(StructType(fields).json()),
-            "committed_at_unix": round(time.time(), 3),
-            "column_mapping": mapping,
-            "retired_physical": retired,
-        }
-        stats = manifest.get("file_stats")
-        if stats:
-            manifest2["file_stats"] = {
-                f: {c: v for c, v in per.items() if c != col}
-                for f, per in stats.items()
-            }
-        blooms = manifest.get("file_blooms")
-        if blooms:
-            manifest2["file_blooms"] = {
-                f: {c: v for c, v in per.items() if c != col}
-                for f, per in blooms.items()
-            }
-        for key in ("constraints", "dv", "txn"):
-            if manifest.get(key):
-                manifest2[key] = manifest[key]
+        manifest2 = tablelog.compose(
+            manifest,
+            "drop_column",
+            manifest["files"],
+            json.loads(StructType(fields).json()),
+            file_stats=_rekeyed(manifest, "file_stats", col, None),
+            file_blooms=_rekeyed(manifest, "file_blooms", col, None),
+            column_mapping=mapping,
+        )
+        manifest2.update(dropped=col, retired_physical=retired)
         try:
             return _try_commit(spark, table, manifest2, expected_version=tip + 1)
         except SnapshotConflictError:
@@ -3066,10 +2556,7 @@ def snapshot_delete_dv(
     else:
         pred = F.expr(predicate)
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
+        tip_v, manifest = tablelog.pin(table, spark=spark)
         schema = StructType.fromJson(manifest["schema"])
         files = manifest["files"]
         # scan_files is what we OPEN to find matches; the commit always
@@ -3079,21 +2566,11 @@ def snapshot_delete_dv(
         if column is not None:
             # whole-file skipping: a file whose [min, max] for `column`
             # cannot intersect [lo, hi] cannot hold a matching row
-            stats = manifest.get("file_stats") or {}
-
-            def may_match(f: str) -> bool:
-                row = stats.get(f, {}).get(column)
-                if row is None:
-                    return True
-                if row[0] is None:  # stats say the file is empty
-                    return False
-                try:
-                    return row[0] <= hi and lo <= row[1]
-                except TypeError:
-                    return True
-            scan_files = [f for f in files if may_match(f)]
+            scan_files = tablelog.prune(
+                files, manifest.get("file_stats"), {column: {"lo": lo, "hi": hi}}
+            )
         if not scan_files:
-            return versions[-1]
+            return tip_v
         # scan WITH row positions, existing vectors already subtracted —
         # a row deleted twice must not be recorded twice. Column-mapped
         # tables read by PHYSICAL name and rename back so the user's
@@ -3124,7 +2601,7 @@ def snapshot_delete_dv(
         )
         new_sidecars = _write_data_files(matched, table, subdir=_DV_DIR)
         if not new_sidecars:  # nothing matched: no commit
-            return versions[-1]
+            return tip_v
         # per-file dead counts come from the just-written sidecars — a
         # deleted-rows-sized read — NOT a second evaluation of the
         # matched plan (which would re-run the full table scan + anti-join)
@@ -3141,7 +2618,7 @@ def snapshot_delete_dv(
         # sidecar "file" values are normalized paths; manifest files may
         # carry a scheme — key cardinality by the MANIFEST spelling so
         # _commit inheritance (keyed on manifest file names) works
-        norm_to_manifest = {_norm_uri(f): f for f in files}
+        norm_to_manifest = {tablelog.norm_uri(f): f for f in files}
         card = dict(prev_card)
         for nf, n in new_card.items():
             mf = norm_to_manifest.get(nf, nf)
@@ -3158,7 +2635,7 @@ def snapshot_delete_dv(
                 "delete_dv",
                 files,
                 manifest.get("file_stats"),
-                expected_version=versions[-1] + 1,
+                expected_version=tip_v + 1,
                 dv=dv,
             )
         except SnapshotConflictError:
@@ -3218,10 +2695,7 @@ def snapshot_zorder(
     if bits * len(zorder_cols) > 62:
         raise ValueError("bits * n_cols must fit a signed 64-bit Z-value")
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
+        tip_v, manifest = tablelog.pin(table, spark=spark)
         schema = StructType.fromJson(manifest["schema"])
         dtype_of = {f.name: f.dataType.simpleString() for f in schema.fields}
         orderable = {
@@ -3260,7 +2734,7 @@ def snapshot_zorder(
                 col = col.cast("timestamp")
             return col.cast("double")  # timestamp → epoch seconds
         if not manifest["files"]:
-            return versions[-1]
+            return tip_v
         df = _read_data_files(spark, schema, manifest["files"], manifest)
         n_buckets = 1 << bits
         probs = [i / n_buckets for i in range(1, n_buckets)]
@@ -3350,7 +2824,7 @@ def snapshot_zorder(
                 "optimize",
                 new_files,
                 file_stats,
-                expected_version=versions[-1] + 1,
+                expected_version=tip_v + 1,
             )
         except SnapshotConflictError:
             _delete_files(spark, new_files)
@@ -3371,33 +2845,15 @@ def snapshot_purge_dv(spark: SparkSession, table: str) -> int:
     expensive than one rewrite. No-op (current version) on a clean
     table."""
     for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
+        tip_v, manifest = tablelog.pin(table, spark=spark)
         card = (manifest.get("dv") or {}).get("cardinality") or {}
         dirty = [f for f in manifest["files"] if f in card]
         if not dirty:
-            return versions[-1]
+            return tip_v
         carried = [f for f in manifest["files"] if f not in card]
         schema = StructType.fromJson(manifest["schema"])
         compacted = _read_data_files(spark, schema, dirty, manifest)
         new_files = _write_data_files(compacted, table, tip_manifest=manifest)
-        prev_stats = manifest.get("file_stats") or {}
-        stats_cols = _prev_stats_cols(prev_stats)
-        new_stats = (
-            _collect_file_stats(
-                new_files, stats_cols, manifest.get("column_mapping") or {}
-            )
-            if stats_cols
-            else None
-        )
-        file_stats = None
-        if prev_stats:
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **(new_stats or {}),
-            }
         placeholder = spark.createDataFrame([], schema)
         try:
             return _commit(
@@ -3405,8 +2861,8 @@ def snapshot_purge_dv(spark: SparkSession, table: str) -> int:
                 table,
                 "purge_dv",
                 carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
+                _new_file_stats(new_files, manifest),
+                expected_version=tip_v + 1,
                 dv={"sidecars": [], "cardinality": {}},
             )
         except SnapshotConflictError:
@@ -3448,15 +2904,7 @@ def snapshot_clone(
     if v not in versions:
         raise ValueError(f"version {v} not in {source_table} (have {versions})")
     m = _read_manifest(spark, source_table, v)
-    manifest = {
-        "operation": "clone",
-        "cloned_from": {"table": source_table, "version": v},
-        "files": m["files"],
-        "schema": m["schema"],
-        "committed_at_unix": round(time.time(), 3),
-    }
-    for key in ("file_stats", "file_blooms", "constraints", "dv",
-                "column_mapping", "retired_physical"):
-        if m.get(key):
-            manifest[key] = m[key]
+    manifest = tablelog.compose(m, "clone", m["files"], m["schema"])
+    manifest.pop("txn", None)  # a fork is a new writer identity
+    manifest["cloned_from"] = {"table": source_table, "version": v}
     return _try_commit(spark, target_table, manifest, expected_version=1)

@@ -39,7 +39,10 @@ def main() -> None:
     from bookstore_aws_lakehouse_spark.session import get_spark
 
     GOLDEN, _ = load_all()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
+    unknown = [q for q in args.queries if q not in GOLDEN]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 8
     spark = get_spark(master=f"local[{cpus}]")
     sf_dir = args.sf_dir
 

@@ -263,7 +263,9 @@ def test_file_may_match_all_null_column_with_null_probe(spark):
     to an empty file. A pushed null probe (EqualNullSafe(col, NULL) →
     None in values) matches exactly those files, so they must SURVIVE
     pruning; an empty file ([None, None, False]) never matches anything."""
-    from bookstore_aws_lakehouse_spark.sources.pyds import _file_may_match
+    from bookstore_aws_lakehouse_spark.sources.tablelog import (
+        file_may_match as _file_may_match,
+    )
 
     all_null = {"k": [None, None, True]}
     empty = {"k": [None, None, False]}

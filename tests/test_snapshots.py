@@ -2880,10 +2880,7 @@ def test_stat_norm_canonical_ordering():
 
 
 def _stat_norm_canonical_ordering_body(dt):
-    from bookstore_aws_lakehouse_spark.sources.pyds import (
-        _stat_norm as pyds_norm,
-    )
-    from bookstore_aws_lakehouse_spark.sources.snapshots import _stat_norm
+    from bookstore_aws_lakehouse_spark.sources.tablelog import _stat_norm
 
     aware = dt.datetime(2026, 8, 15, 4, 30, 0, 500, tzinfo=dt.timezone.utc)
     naive = dt.datetime(2026, 8, 15, 4, 30, 0, 500)  # TZ pinned UTC above
@@ -2898,9 +2895,6 @@ def _stat_norm_canonical_ordering_body(dt):
     ]
     canon = [_stat_norm(v) for v in seq]
     assert canon == sorted(canon)
-    # mirror contract: the pyds copy is bit-identical in behavior
-    for v in seq + [dt.date(2026, 8, 15), aware, 7, 1.5, "x", None]:
-        assert pyds_norm(v) == _stat_norm(v)
     assert _stat_norm(None) is None and _stat_norm(7) == 7
 
 
@@ -2914,7 +2908,7 @@ def test_stat_norm_naive_datetime_is_host_local():
     import os
     import time
 
-    from bookstore_aws_lakehouse_spark.sources import pyds, snapshots
+    from bookstore_aws_lakehouse_spark.sources.tablelog import _stat_norm
 
     old_tz = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
@@ -2927,12 +2921,9 @@ def test_stat_norm_naive_datetime_is_host_local():
             tzinfo=None
         )
         assert want == dt.datetime(2024, 1, 1, 17, 0, 0)  # UTC-5
-        for mod in (snapshots, pyds):
-            assert mod._stat_norm(naive) == want.isoformat(
-                timespec="microseconds"
-            )
-            # a tz-aware twin of the same instant normalizes identically
-            assert mod._stat_norm(naive.astimezone()) == mod._stat_norm(naive)
+        assert _stat_norm(naive) == want.isoformat(timespec="microseconds")
+        # a tz-aware twin of the same instant normalizes identically
+        assert _stat_norm(naive.astimezone()) == _stat_norm(naive)
         # DST-ambiguous local time (ADVICE r10): 2024-11-03 01:30 EST/EDT
         # exists twice; mktime (tm_isdst=-1) and astimezone (fold=0) may
         # pick different instants — the normalizer must land EXACTLY where
@@ -2941,10 +2932,7 @@ def test_stat_norm_naive_datetime_is_host_local():
         want_fold = dt.datetime.fromtimestamp(
             int(time.mktime(fold.timetuple())), dt.timezone.utc
         ).replace(tzinfo=None) + dt.timedelta(microseconds=250)
-        for mod in (snapshots, pyds):
-            assert mod._stat_norm(fold) == want_fold.isoformat(
-                timespec="microseconds"
-            )
+        assert _stat_norm(fold) == want_fold.isoformat(timespec="microseconds")
     finally:
         if old_tz is None:
             os.environ.pop("TZ", None)
